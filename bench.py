@@ -281,15 +281,11 @@ def run_scaling_worker(cpus: str, input_dir: str) -> None:
     n = ev.count()
     root = tempfile.mkdtemp(prefix=f"scaling_vault_{cpus}_", dir=state_base)
     vault = TranscriptVault(spark, root, num_buckets=32)
-    # A/B hook: the sat-lane prefetch fills idle cores on the narrow leg
-    # but adds a competing side thread on a saturated wide leg — setting
-    # SPARK_GRAFT_SCALING_PREFETCH=0 isolates that effect per leg
-    prefetch = os.environ.get("SPARK_GRAFT_SCALING_PREFETCH", "1") != "0"
     t0 = time.perf_counter()
-    MicrobatchRunner(vault, prefetch=prefetch).replay(ev)
+    MicrobatchRunner(vault).replay(ev)
     dt = time.perf_counter() - t0
     shutil.rmtree(root, ignore_errors=True)
-    print(json.dumps({"sec": round(dt, 3), "events_per_sec": round(n / dt, 1), "n_events": n, "prefetch": prefetch}))
+    print(json.dumps({"sec": round(dt, 3), "events_per_sec": round(n / dt, 1), "n_events": n}))
     spark.stop()
 
 

@@ -153,7 +153,7 @@ class HubMerge:
         batch_col: str = "batch_id",
         batch_ids: list[int] | None = None,
         affected_buckets: list[int] | None = None,
-    ) -> dict[int, dict[str, Any]] | None:
+    ) -> dict[int, dict[str, Any]]:
         """Window-coalesced insert-only merge: register every pending
         batch's new keys in ONE pass, identical to applying the batches
         sequentially. A key first seen in batch b gets b's row exactly as

@@ -25,6 +25,7 @@ microbatch. Differences are Spark-first, not semantic:
 
 from __future__ import annotations
 
+import logging
 import os
 from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
@@ -35,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyelt_spark.operators.hubs import HubMerge, LinkMerge
-from pyelt_spark.operators.prefetch import run_lane_one_ahead
 from pyelt_spark.operators.scd2 import Scd2Merge, Scd2Table
 from pyelt_spark.plans.domain import (
     DynamicLinkReference,
@@ -50,18 +50,88 @@ from pyelt_spark.storage.lake import LakeTable
 ALL_PARTS = ["sor", "valuesets", "hubs", "views", "links", "viewlinks"]
 
 
-def _window_sized(spark, total_rows: int) -> bool:
-    """Volume gate for window-coalesced replay lanes: coalescing trades
+log = logging.getLogger(__name__)
+
+
+def _window_chunks(
+    spark, lane: str, ids: list[int], rows: dict[int, int]
+) -> list[list[int]]:
+    """Cut a lane's pending ids into consecutive sub-windows of at most
+    ``SPARK_GRAFT_WINDOW_ROWS_PER_CORE`` × cores input rows each (a batch
+    over the budget on its own forms a chunk of one). Coalescing trades
     per-batch fixed costs for one big per-key chain (sorts, a full-outer
     join), which wins while the per-task state fits comfortably in memory
     and loses once concurrent sort tasks spill (measured: 16M events on 8
-    pinned cores ran 202 s windowed vs 135 s per-batch, while 1M events on
-    32 cores ran 13 s windowed vs 20 s per-batch). The budget scales with
-    the session's parallelism — the same stream that must fall back on a
-    2-core leg windows happily on a wide cluster — and is env-tunable for
-    machines with different memory/core ratios."""
+    pinned cores ran 202 s as one window vs 135 s per-batch, while 1M
+    events on 32 cores ran 13 s windowed vs 20 s per-batch). The budget
+    scales with the session's parallelism and is env-tunable for machines
+    with different memory/core ratios."""
     per_core = int(os.environ.get("SPARK_GRAFT_WINDOW_ROWS_PER_CORE", "200000"))
-    return total_rows <= per_core * max(spark.sparkContext.defaultParallelism, 1)
+    budget = per_core * max(spark.sparkContext.defaultParallelism, 1)
+    chunks: list[list[int]] = []
+    used = 0
+    for b in ids:
+        n = rows.get(b, 0)
+        if chunks and used + n <= budget:
+            chunks[-1].append(b)
+            used += n
+        else:
+            chunks.append([b])
+            used = n
+    if len(chunks) > 1:
+        log.info(
+            "lane %s: %d rows exceed the %d-row window budget; split into %s",
+            lane, sum(rows.get(b, 0) for b in ids), budget,
+            ", ".join(
+                f"{c[0]}-{c[-1]} ({sum(rows.get(b, 0) for b in c)} rows)"
+                for c in chunks
+            ),
+        )
+    return chunks
+
+
+def _apply_lane(
+    spark,
+    lane: str,
+    batch_ids: list[int],
+    affected: dict[int, dict[str, list[int]]],
+    rows_per: dict[tuple[int, str], int],
+    window: Callable[[list[int], list[int] | None], dict[int, dict]],
+) -> dict[int, dict]:
+    """Apply one table's pending batches as consecutive windows through
+    ``window(ids, buckets)`` (the table's ``apply_batches``), and return
+    each batch's metrics. A window of one batch takes the merge's
+    single-batch path. Batches the replay probe proved empty for this
+    table are skipped; a table the probe never saw (valuesets,
+    unprobeable mappings) has no row counts or bucket evidence, so it
+    applies as one window whose merge discovers its own buckets."""
+    slots = {b: affected.get(b) or {} for b in batch_ids}
+    probed = any(lane in slot for slot in slots.values())
+    ids = [b for b in batch_ids if slots[b].get(lane) != []]
+    if not ids:
+        chunks = []
+    elif probed:
+        chunks = _window_chunks(
+            spark, lane, ids, {b: rows_per.get((b, lane), 0) for b in ids}
+        )
+    else:
+        chunks = [ids]
+    out: dict[int, dict] = {}
+    for chunk in chunks:
+        if len(chunk) == 1:
+            log.info("lane %s: batch %d alone, single-batch apply", lane, chunk[0])
+        else:
+            log.info(
+                "lane %s: window %d-%d (%d batches)",
+                lane, chunk[0], chunk[-1], len(chunk),
+            )
+        buckets = (
+            sorted({k for b in chunk for k in slots[b].get(lane) or []})
+            if probed
+            else None
+        )
+        out.update(window(chunk, buckets))
+    return {b: out.get(b, {"skipped_empty_batch": b}) for b in batch_ids}
 
 
 def _union(frames: list[DataFrame], allow_missing: bool = True) -> DataFrame:
@@ -161,17 +231,12 @@ class Pipe:
         op_col: str | None = "op",
         ts_col: str = "ts",
         source_system: str = "events",
-        mor: bool = False,
         validations: list[Any] | None = None,
     ):
         self.spark = spark
         self.root = root
         self.mappings = mappings
         self.num_buckets = num_buckets
-        # merge-on-read sat heads: appends + read-time collapse instead of
-        # copy-on-write rewrites — the dense-update-batch mode (see
-        # operators/scd2.Scd2Table)
-        self.mor = mor
         self.order_by = order_by or ["seq"]
         self.op_col = op_col
         self.ts_col = ts_col
@@ -221,8 +286,7 @@ class Pipe:
             if name in self.sats:
                 continue
             self.sats[name] = Scd2Table(
-                self.spark, os.path.join(self.root, name), self.num_buckets,
-                mor=self.mor,
+                self.spark, os.path.join(self.root, name), self.num_buckets
             )
             self.sat_merges[name] = Scd2Merge(
                 business_keys=list(owner.__bk__) + sat.grain_cols(),
@@ -313,7 +377,8 @@ class Pipe:
 
         d = self._runs_dir()
         attempt = sum(
-            1 for n in os.listdir(d) if n.startswith(f"{batch_id:012d}_")
+            1 for n in os.listdir(d)
+            if n.startswith(f"{batch_id:012d}_") and n.endswith(".json")
         )
         path = os.path.join(d, f"{batch_id:012d}_{attempt:03d}.json")
         rec = {
@@ -326,8 +391,10 @@ class Pipe:
             "engine_version": __version__,
             "tables": {},
         }
-        with open(path, "w") as f:
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
             _json.dump(rec, f)
+        os.replace(tmp, path)
         return path
 
     def _runs_finish(self, path: str, out: dict[str, Any]) -> None:
@@ -621,30 +688,15 @@ class Pipe:
                 if _skip(name):
                     jobs.append((name, lambda b=batch_id: {"skipped_empty_batch": b}))
                     continue
-                t, m, e, a = (
-                    self.sats[name],
-                    self.sat_merges[name],
-                    _union(frames),
-                    aff.get(name),
+                jobs.append(
+                    (
+                        name,
+                        lambda t=self.sats[name], m=self.sat_merges[name],
+                        e=_union(frames), a=aff.get(name): m.apply_batch(
+                            t, e, batch_id, lineage=lineage, affected_buckets=a
+                        ),
+                    )
                 )
-                fn = lambda t=t, m=m, e=e, a=a: m.apply_batch(
-                    t, e, batch_id, lineage=lineage, affected_buckets=a
-                )
-                # one-ahead prefetch hooks for the laned replay: the sat's
-                # batch-side frame (dedup + hashdiff, the merge's one full
-                # shuffle) reads no table state, so a lane can materialize
-                # batch N+1's frame while batch N writes (_replay_laned).
-                # Already-committed batches (torn-crash resume) get no hooks:
-                # apply_batch skips them before touching the frame, so a
-                # prefetch would be a wasted full shuffle (ADVICE r5)
-                if batch_id in t.committed_batch_ids():
-                    jobs.append((name, fn))
-                    continue
-                fn.prepare = lambda t=t, m=m, e=e: m.prepare_batch(t, e)
-                fn.apply_prepared = lambda prep, t=t, m=m, e=e, a=a: m.apply_batch(
-                    t, e, batch_id, lineage=lineage, affected_buckets=a, prepared=prep
-                )
-                jobs.append((name, fn))
         return jobs
 
     def _valueset_jobs(
@@ -775,8 +827,6 @@ class Pipe:
         )
         for t in tables:
             t.compact_if_crowded(max_dirs_per_bucket)
-        for s in self.sats.values():
-            s.compact_head(max_dirs_per_bucket=max_dirs_per_bucket)
 
     def replay(
         self,
@@ -967,62 +1017,33 @@ class Pipe:
         rows_per: dict[tuple[int, str], int] | None = None,
     ) -> list[dict]:
         """Per-TABLE lanes over the batch sequence: each table applies its
-        batches in order on its own sequential chain, and all chains run
-        concurrently. Correctness needs only per-table batch order (batch
-        N+1's merge reads the state batch N committed — on the same
-        table), so the per-batch cross-table barrier of the serial loop is
-        pure wasted wall-clock; dropping it takes the replay from
+        batches in order on its own lane, and all lanes run concurrently.
+        Correctness needs only per-table batch order (batch N+1's merge
+        reads the state batch N committed — on the same table), so the
+        per-batch cross-table barrier of the serial loop is pure wasted
+        wall-clock; dropping it takes the replay from
         Σ_batches max_tables(latency) to max_tables Σ_batches(latency).
-        Each merge stays individually idempotent per (table, batch_id), so
-        a crash — which can now leave DIFFERENT tables at different
-        batches — still resumes exactly-once by re-running the replay.
-        Run-registry records are started per batch up front and finished
-        as the outputs assemble; a crash leaves every unfinished batch
-        'running' (torn-run forensics unchanged)."""
+
+        A lane applies its table's pending ids as consecutive windows
+        (``_apply_lane``: ``apply_batches``, chunked by the rows-per-core
+        budget). The mapping projections are batch-independent, so each
+        table's input is its mappings' projections of the FULL stream and
+        the window merge slices it by batch id — identical to the
+        per-batch unions of ``run``. Snapshot-mapped sats are the one
+        exception: a snapshot batch claims completeness on its own, so
+        they loop over batches with ``apply_snapshot``.
+
+        Each merge stays idempotent per (table, batch_id), so a crash —
+        which can leave DIFFERENT tables at different batches — still
+        resumes exactly-once by re-running the replay. Run-registry
+        records are started per batch up front and finished once every
+        lane is done; a crash leaves every batch 'running'."""
+        from pyelt_spark.operators.scd2 import apply_snapshot
+
         parts_l = ALL_PARTS if parts is None else parts
         batch_ids = [int(b) for b in ids]
-        outs: dict[int, dict[str, Any]] = {
-            b: {"batch_id": b, "parts": list(parts_l)} for b in batch_ids
-        }
-        lanes: "OrderedDict[str, list[tuple[int, Callable[[], dict]]]]" = OrderedDict()
-        run_recs: list[str] = []
-        for b in batch_ids:
-            self._affected = affected.get(b) or {}
-            batch = events.filter(F.col(batch_col) == b)
-            jobs: list[tuple[str, Callable[[], dict]]] = []
-            if "valuesets" in parts_l:
-                jobs += self._valueset_jobs(batch, b)
-            if "hubs" in parts_l:
-                inputs = [
-                    (m, self._project(batch, m.field_map, m.filter))
-                    for m in self.mappings
-                    if isinstance(m, SorToEntityMapping)
-                ]
-                jobs += self._grouped_entity_jobs(inputs, b, None)
-            if "links" in parts_l:
-                link_evs: dict = {}
-                for m in self.mappings:
-                    if isinstance(m, SorToLinkMapping):
-                        ev = self._project(batch, m.field_map, m.filter)
-                        link_evs.setdefault(m.link, []).append(
-                            self._link_input(m.link, ev, m.type_expr)
-                        )
-                jobs += self._link_jobs(link_evs, b)
-            run_recs.append(self._runs_start(b, parts_l))
-            for name, fn in jobs:
-                lanes.setdefault(name, []).append((b, fn))
-        # job closures captured their batch's map at build time; reset the
-        # instance attribute so a later run() on this Pipe starts clean
-        # (ADVICE r5)
-        self._affected = {}
-
-        # WINDOW-COALESCED lane inputs: each table's whole pending id
-        # sequence can apply as ONE closed-form pass (apply_batches) —
-        # the mapping projections are batch-independent, so projecting the
-        # full stream and letting the window merge slice by batch id is
-        # identical to the per-batch unions. Snapshot-mapped sats keep the
-        # per-batch path (a snapshot batch claims completeness per batch).
-        win_calls: dict[str, Callable[[list[int], list[int]], dict | None]] = {}
+        windows: dict[str, Callable[[list[int], list[int] | None], dict]] = {}
+        snapshots: dict[str, Callable[[int], dict]] = {}
         if "hubs" in parts_l:
             hub_w: "OrderedDict[type[HubEntity], list[DataFrame]]" = OrderedDict()
             sat_w: "OrderedDict[str, list[DataFrame]]" = OrderedDict()
@@ -1039,20 +1060,26 @@ class Pipe:
                     sat_w.setdefault(sname, []).append(sev)
                     sat_snap_w.setdefault(sname, set()).add(snap)
             for owner, frames in hub_w.items():
-                win_calls[owner.__hub_name__] = (
+                windows[owner.__hub_name__] = (
                     lambda ids_t, aff_t, t=self.hubs[owner], mg=self.hub_merges[owner],
                     e=_union(frames): mg.apply_batches(
                         t, e, batch_col, ids_t, affected_buckets=aff_t
                     )
                 )
             for sname, frames in sat_w.items():
-                if sat_snap_w.get(sname) == {False}:
-                    win_calls[sname] = (
-                        lambda ids_t, aff_t, t=self.sats[sname],
-                        mg=self.sat_merges[sname], e=_union(frames):
-                        mg.apply_batches(
-                            t, e, batch_col, ids_t, affected_buckets=aff_t
-                        )
+                if len(sat_snap_w[sname]) > 1:
+                    raise ValueError(
+                        f"sat {sname}: mixing snapshot and change-stream mappings "
+                        "in one run is ambiguous (snapshot claims completeness)"
+                    )
+                t, mg, e = self.sats[sname], self.sat_merges[sname], _union(frames)
+                if sat_snap_w[sname] == {True}:
+                    snapshots[sname] = lambda b, t=t, mg=mg, e=e: apply_snapshot(
+                        t, mg, e.filter(F.col(batch_col) == b), b
+                    )
+                else:
+                    windows[sname] = lambda ids_t, aff_t, t=t, mg=mg, e=e: (
+                        mg.apply_batches(t, e, batch_col, ids_t, affected_buckets=aff_t)
                     )
         if "links" in parts_l:
             link_w: dict = {}
@@ -1063,7 +1090,7 @@ class Pipe:
                         self._link_input(mp.link, ev_w, mp.type_expr)
                     )
             for le, frames in link_w.items():
-                win_calls[le.__dbname__] = (
+                windows[le.__dbname__] = (
                     lambda ids_t, aff_t, t=self.links[le], mg=self.link_merges[le],
                     e=_union(frames): mg.apply_batches(
                         t, e, batch_col, ids_t, affected_buckets=aff_t
@@ -1087,8 +1114,6 @@ class Pipe:
                 )
                 vs_w.setdefault(mp.valueset_name, []).append(vs)
             for vname, frames in vs_w.items():
-                from pyelt_spark.operators.hubs import HubMerge
-
                 mg = HubMerge(
                     business_keys=["valueset_naam", "code"],
                     hub_type=f"valueset_{vname}",
@@ -1096,52 +1121,34 @@ class Pipe:
                     source_system=self.source_system,
                     carry_cols=["omschrijving"],
                 )
-                win_calls[f"valueset_{vname}"] = (
+                windows[f"valueset_{vname}"] = (
                     lambda ids_t, aff_t, t=self.valuesets[vname], mg=mg,
                     e=_union(frames, allow_missing=False): mg.apply_batches(
                         t, e, batch_col, ids_t, affected_buckets=aff_t
                     )
                 )
 
+        outs: dict[int, dict[str, Any]] = {
+            b: {"batch_id": b, "parts": list(parts_l)} for b in batch_ids
+        }
+        run_recs = [self._runs_start(b, parts_l) for b in batch_ids]
+
         def _run_lane(name: str) -> None:
-            # window path first: the lane's whole pending sequence in one
-            # pass; fall back to the one-ahead per-batch chain when the
-            # closed form refuses (merge-on-read, out-of-order seqs,
-            # snapshot mappings have no window call at all)
-            win = win_calls.get(name)
-            if win is not None:
-                ids_t = [b for b in batch_ids if (affected.get(b) or {}).get(name) != []]
-                # unprobed tables (valuesets, unprobeable mappings) have no
-                # bucket evidence — None lets the window merge discover its
-                # own buckets; [] would wrongly publish an empty manifest
-                probed_any = any(name in (affected.get(b) or {}) for b in batch_ids)
-                if probed_any and not _window_sized(
-                    self.spark,
-                    sum((rows_per or {}).get((b, name), 0) for b in ids_t),
-                ):
-                    win = None
-                aff_t = (
-                    sorted(
-                        {
-                            k
-                            for b in batch_ids
-                            for k in ((affected.get(b) or {}).get(name) or [])
-                        }
-                    )
-                    if probed_any
-                    else None
+            if name in snapshots:
+                log.info(
+                    "lane %s: snapshot mapping, per-batch loop over %d batches",
+                    name, len(batch_ids),
                 )
-                res = win(ids_t, aff_t) if win is not None else None
-                if res is not None:
-                    for b in batch_ids:
-                        outs[b][name] = res.get(b, {"skipped_empty_batch": b})
-                    return
+                for b in batch_ids:
+                    outs[b][name] = snapshots[name](b)
+                return
+            res = _apply_lane(
+                self.spark, name, batch_ids, affected, rows_per or {}, windows[name]
+            )
+            for b in batch_ids:
+                outs[b][name] = res[b]
 
-            def emit(b: int, out: dict) -> None:
-                outs[b][name] = out
-
-            run_lane_one_ahead(lanes[name], emit)
-
+        lanes = [*windows, *snapshots]
         if lanes:
             with ThreadPoolExecutor(max_workers=min(len(lanes), 16)) as pool:
                 futs = [pool.submit(_run_lane, name) for name in lanes]

@@ -70,8 +70,7 @@ class TranscriptVault:
     payload evolution from unseen event columns) and the tuned three-way
     concurrent submit the benchmark exercises."""
 
-    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32,
-                 mor: bool = False):
+    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32):
         self.spark = spark
         self.root = root
         self.pipe = Pipe(
@@ -84,7 +83,6 @@ class TranscriptVault:
                 ),
             ],
             num_buckets=num_buckets,
-            mor=mor,
         )
         self.hub = self.pipe.hub_table(Conversation)
         self.sat = self.pipe.sat_table(Conversation.Turn)
@@ -178,7 +176,6 @@ class TranscriptVault:
         inspection is in-memory — zero cost when nothing is fragmented."""
         for t in (self.hub, self.link, self.sat.hist):
             t.compact_if_crowded(max_dirs_per_bucket)
-        self.sat.compact_head(max_dirs_per_bucket=max_dirs_per_bucket)
 
     def replay(self, events: DataFrame, batch_col: str = "batch_id") -> list[dict]:
         """Replay a full change stream batch-by-batch in batch order."""

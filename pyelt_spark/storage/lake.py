@@ -15,8 +15,9 @@ catalog call when one is available:
    ~1% of the state instead of all of it.
 
 2. **Exactly-once via idempotent commits.** A commit is a JSON manifest
-   written to a temp name then atomically renamed to
-   ``_commits/{version}.json``; it records the ``batch_id`` it applied.
+   written to a temp name then published by hard link to
+   ``_commits/{version}.json`` — atomic and create-exclusive, so a second
+   writer of the same version fails instead of replacing it; it records the ``batch_id`` it applied.
    Re-applying an already-committed batch_id is a no-op (the runner
    checks ``committed_batch_ids()``), so crash-replay from any point is
    safe — the reference gets the same property from its EXCEPT/NOT EXISTS
@@ -53,6 +54,11 @@ from pyelt_spark.functions.hashing import HashRecipe
 
 BUCKET_COL = "_bucket"
 _PART_COL = "_bucket_p"  # duplicated partition dir column (partitionBy drops it)
+
+
+class CommitConflict(RuntimeError):
+    """Another writer already published the manifest version this commit
+    was about to publish."""
 
 
 def _footer_row_count(d: str) -> int:
@@ -137,12 +143,11 @@ class LakeTable:
         # Single-writer assumption (one driver owns a table), matching the
         # commit protocol; reopen the table to see another writer's commits.
         # The lock serializes cache population against the commit append —
-        # the laned replays' prefetch thread reads recipe()/commits() while
-        # the lane thread commits, and an unsynchronized first read could
-        # capture a pre-commit disk listing and assign it AFTER the commit
-        # appended, silently dropping that commit from the cache (the next
-        # version number would then be reused and os.rename would overwrite
-        # a published manifest).
+        # a reader thread (e.g. a concurrent lane reading recipe()/commits())
+        # racing the committing thread could otherwise capture a pre-commit
+        # disk listing and assign it AFTER the commit appended, silently
+        # dropping that commit from the cache (the next commit would then
+        # reuse its version number and fail as a CommitConflict).
         self._commits_cache: list[Commit] | None = None
         self._commits_lock = threading.Lock()
 
@@ -150,6 +155,21 @@ class LakeTable:
 
     def _commit_dir(self) -> str:
         return os.path.join(self.path, "_commits")
+
+    def _manifest(self, version: int) -> str:
+        return os.path.join(self._commit_dir(), f"{version:012d}.json")
+
+    def _check_unpublished(self, version: int) -> None:
+        """Fail before writing ``data/v{version}`` if another writer has
+        already published that version (this handle's commit-log cache is
+        stale): its data files would otherwise be overwritten in place.
+        The create-exclusive publish in :meth:`commit` remains the guard
+        for a writer that publishes between this check and the link."""
+        if os.path.exists(self._manifest(version)):
+            raise CommitConflict(
+                f"{self.path}: version {version} was already published by "
+                "another writer"
+            )
 
     def commits(self) -> list[Commit]:
         with self._commits_lock:
@@ -247,6 +267,7 @@ class LakeTable:
         scheduler."""
         last = self.last_commit()
         version = (last.version + 1) if last else 1
+        self._check_unpublished(version)
         rel_dir = os.path.join("data", f"v{version}")
         out_dir = os.path.join(self.path, rel_dir)
         df = new_data.withColumn(_PART_COL, F.col(BUCKET_COL)).repartition(
@@ -298,6 +319,8 @@ class LakeTable:
         own_last, other_last = self.last_commit(), other.last_commit()
         own_ver = (own_last.version + 1) if own_last else 1
         other_ver = (other_last.version + 1) if other_last else 1
+        self._check_unpublished(own_ver)
+        other._check_unpublished(other_ver)
         own_rel = os.path.join("data", f"v{own_ver}")
         other_rel = os.path.join("data", f"v{other_ver}")
         tmp = os.path.join(self.path, "data", f".pair-{uuid.uuid4().hex}")
@@ -381,6 +404,7 @@ class LakeTable:
             out_dir = os.path.join(self.path, rel_dir)
             written_buckets = set()
             if new_data is not None:
+                self._check_unpublished(version)
                 (
                     new_data.withColumn(_PART_COL, F.col(BUCKET_COL))
                     .repartition(max(len(affected_buckets), 1), F.col(BUCKET_COL))
@@ -432,7 +456,17 @@ class LakeTable:
         tmp = os.path.join(self._commit_dir(), f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
             json.dump(commit.to_json(), f)
-        os.rename(tmp, os.path.join(self._commit_dir(), f"{version:012d}.json"))
+        # create-exclusive publish: link() fails if another writer already
+        # published this version (rename() would silently replace it)
+        try:
+            os.link(tmp, self._manifest(version))
+        except FileExistsError:
+            raise CommitConflict(
+                f"{self.path}: version {version} was already published by "
+                "another writer"
+            ) from None
+        finally:
+            os.unlink(tmp)
         with self._commits_lock:
             # version guard: a concurrent commits() population may have run
             # between the rename above and this append, already listing the

@@ -21,24 +21,19 @@ merge metrics (per-partition lineage) for every commit.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyelt_spark.operators.prefetch import run_lane_one_ahead
+from pyelt_spark.plans.pipe import _apply_lane
 from pyelt_spark.plans.pipeline import TranscriptVault
 
 
-from pyelt_spark.plans.pipe import _window_sized  # noqa: F401  (shared gate)
-
-
 class MicrobatchRunner:
-    def __init__(self, vault: TranscriptVault, prefetch: bool = True):
+    def __init__(self, vault: TranscriptVault):
         self.vault = vault
-        # sat-lane one-ahead prefetch (see replay); off = plain lanes,
-        # kept togglable for A/B latency measurement
-        self.prefetch = prefetch
 
     # ------------------------------------------------------------ batch mode
 
@@ -56,25 +51,28 @@ class MicrobatchRunner:
         merge is individually idempotent, so re-applying such a torn batch
         completes exactly the missing tables.
 
-        Execution is LANED: each table (hub / sat / link) runs its batches
-        as its own sequential chain, and the three chains run concurrently.
-        Correctness needs only per-table batch order (batch N+1's merge
-        reads the state batch N's commit published — on its OWN table;
-        hash surrogate keys mean no table ever reads another's state), so
-        a per-batch barrier across tables is pure wasted wall-clock: the
-        replay's floor drops from Σ max(table latencies) to
-        max(Σ per-table latencies). On a cluster the same structure keeps
-        three shuffle/write pipelines in flight continuously instead of
-        draining to the slowest table once per batch."""
+        Execution is LANED: each table (hub / sat / link) applies its
+        pending batches on its own lane, and the three lanes run
+        concurrently. Correctness needs only per-table batch order (batch
+        N+1's merge reads the state batch N's commit published — on its OWN
+        table; hash surrogate keys mean no table ever reads another's
+        state), so a per-batch barrier across tables is pure wasted
+        wall-clock. A lane applies its ids as consecutive windows
+        (``plans.pipe._apply_lane``: one closed-form ``apply_batches`` pass
+        per window, chunked by the rows-per-core budget; a window of one
+        batch takes the single-batch merge). Probe-proven-empty batches
+        are left out of each table's windows. ``on_batch(batch_id,
+        metrics)`` fires for each applied batch, in order, once every lane
+        is done."""
         done = (
             self.vault.sat.committed_batch_ids()
             & self.vault.hub.committed_batch_ids()
             & self.vault.link.committed_batch_ids()
         )
         # ONE up-front job computes every batch's affected buckets for all
-        # three tables (batch ids fall out of the same aggregation) — the
-        # per-batch merges then skip their bucket-discovery collect, taking
-        # one driver-blocking job off each batch's critical path. A bucket
+        # three tables (batch ids and per-lane row counts fall out of the
+        # same aggregation) — the merges then skip their bucket-discovery
+        # collect, taking a driver-blocking job off the critical path. A bucket
         # SUPERSET per table is fine (hub/link sets here ignore the op/null
         # filters): it only widens the pruned state read.
         from pyelt_spark.functions.hashing import hash_key
@@ -140,169 +138,55 @@ class MicrobatchRunner:
             else (lambda df: df)
         )
         sat_merge = v.batch_sat_merge(events)
+        ups = op_filter(events)
 
-        def _hub(b: int, aff: list[int] | None) -> dict:
-            ups = op_filter(events.filter(F.col(batch_col) == b))
-            return v.hub_merge.apply_batch(v.hub, ups, b, aff)
-
-        def _sat(b: int, aff: list[int] | None, prepared: dict | None = None) -> dict:
-            batch_df = events.filter(F.col(batch_col) == b)
-            return sat_merge.apply_batch(v.sat, batch_df, b, {}, aff, prepared=prepared)
-
-        def _link(b: int, aff: list[int] | None) -> dict:
-            ups = op_filter(events.filter(F.col(batch_col) == b)).filter(
-                F.col("tool").isNotNull()
-            )
-            return v.link_merge.apply_batch(v.link, ups, b, aff)
-
-        # lane-scoped maintenance: each lane compacts only ITS tables (a
-        # cross-lane compaction would violate the tables' single-writer
+        # per lane: the table's window merge, then lane-scoped maintenance
+        # (a cross-lane compaction would violate the tables' single-writer
         # commit protocol mid-replay)
         lanes = {
-            "hub": (_hub, lambda: v.hub.compact_if_crowded()),
-            "sat": (
-                _sat,
-                # max_dirs_per_bucket=16 matches the serial path
-                # (pipeline.maintain) — compact_head's own default of 8
-                # would silently double MoR compaction frequency mid-replay
-                lambda: (
-                    v.sat.hist.compact_if_crowded(),
-                    v.sat.compact_head(max_dirs_per_bucket=16),
+            "hub": (
+                lambda ids, aff: v.hub_merge.apply_batches(
+                    v.hub, ups, batch_col, ids, affected_buckets=aff
                 ),
+                v.hub.compact_if_crowded,
             ),
-            "link": (_link, lambda: v.link.compact_if_crowded()),
+            "sat": (
+                lambda ids, aff: sat_merge.apply_batches(
+                    v.sat, events, batch_col, ids, lineage={}, affected_buckets=aff
+                ),
+                v.sat.hist.compact_if_crowded,
+            ),
+            "link": (
+                lambda ids, aff: v.link_merge.apply_batches(
+                    v.link, ups.filter(F.col("tool").isNotNull()), batch_col, ids,
+                    affected_buckets=aff,
+                ),
+                v.link.compact_if_crowded,
+            ),
         }
-
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        results: dict[tuple[str, int], dict] = {}
-        lock = threading.Lock()
-        lane_done: dict[int, int] = {b: 0 for b in pending}
-        fired = [0]  # next pending index whose on_batch may fire
-
-        def _assemble(b: int) -> dict:
-            return {name: results[(name, b)] for name in lanes}
-
-        def _mark(b: int) -> None:
-            if on_batch is None:
-                return
-            with lock:
-                lane_done[b] += 1
-                while fired[0] < len(pending) and lane_done[pending[fired[0]]] == len(lanes):
-                    nb = pending[fired[0]]
-                    on_batch(nb, _assemble(nb))
-                    fired[0] += 1
-
-        # WINDOW-COALESCED lanes: each table applies its whole pending id
-        # window in one closed-form pass (Scd2Merge.apply_batches /
-        # HubMerge.apply_batches — the catch-up mode), falling back to the
-        # per-batch chain when a table's preconditions fail (merge-on-read
-        # head, or out-of-order winner seqs). Probe-proven-empty batches
-        # are excluded from each table's window, exactly like the
-        # per-batch skip.
-        def _window_ids(t: str) -> list[int]:
-            return [b for b in pending if affected.get(b, {}).get(t) != []]
-
-        def _window_aff(t: str) -> list[int]:
-            return sorted(
-                {k for b in pending for k in (affected.get(b, {}).get(t) or [])}
-            )
-
-        def _try_window(name: str) -> bool:
-            ids_t = _window_ids(name)
-            aff_t = _window_aff(name)
-            if not _window_sized(
-                v.spark, sum(rows_per.get((b, name), 0) for b in ids_t)
-            ):
-                return False
-            if name == "sat":
-                res = sat_merge.apply_batches(
-                    v.sat, events, batch_col, ids_t, lineage={},
-                    affected_buckets=aff_t,
-                )
-            elif name == "hub":
-                res = v.hub_merge.apply_batches(
-                    v.hub, op_filter(events), batch_col, ids_t,
-                    affected_buckets=aff_t,
-                )
-            else:
-                res = v.link_merge.apply_batches(
-                    v.link,
-                    op_filter(events).filter(F.col("tool").isNotNull()),
-                    batch_col,
-                    ids_t,
-                    affected_buckets=aff_t,
-                )
-            if res is None:
-                return False
-            for b in pending:
-                results[(name, b)] = res.get(b, {"skipped_empty_batch": b})
-            lanes[name][1]()  # lane-scoped maintenance once per window
-            for b in pending:
-                _mark(b)
-            return True
-
-        # Sat-lane pipelining (operators/prefetch.py): the batch-side frame
-        # (the merge's one full shuffle — dedup + hashdiff) reads no table
-        # state, so batch N+1's frame is prefetched on a side thread while
-        # batch N's head/hist writes run. The sat lane is the replay's
-        # critical path (widest payload, head + hist writes per batch);
-        # hub/link merges are cheaper than the sat's write tail, so
-        # prefetching them would only add job-scheduler contention.
-        def _sat_job(b: int, aff: list[int] | None):
-            if aff == []:
-                return lambda: {"skipped_empty_batch": b}
-
-            def fn(prepared: dict | None = None) -> dict:
-                # one sat invocation shared by both prefetch states — a
-                # divergence here is the class the parity tests pin
-                return _sat(b, aff, prepared)
-
-            # a torn-crash resume re-walks sat-committed batches (the done
-            # set intersects all tables); apply_batch skips them before
-            # touching the frame, so prefetching one would be a wasted
-            # full dedup+hashdiff shuffle (ADVICE r5) — no hooks for them
-            if b in v.sat.committed_batch_ids():
-                return fn
-
-            fn.prepare = lambda: sat_merge.prepare_batch(
-                v.sat, events.filter(F.col(batch_col) == b)
-            )
-            fn.apply_prepared = fn
-            return fn
+        results: dict[str, dict[int, dict]] = {}
 
         def _run_lane(name: str) -> None:
-            fn, maintain = lanes[name]
-            if _try_window(name):
-                return
-
-            def emit(b: int, out: dict) -> None:
-                results[(name, b)] = out
-                maintain()
-                _mark(b)
-
-            if name == "sat" and self.prefetch:
-                run_lane_one_ahead(
-                    [(b, _sat_job(b, affected.get(b, {}).get("sat"))) for b in pending],
-                    emit,
-                )
-                return
-            for b in pending:
-                aff = affected.get(b, {}).get(name)
-                emit(b, {"skipped_empty_batch": b} if aff == [] else fn(b, aff))
+            window, maintain = lanes[name]
+            results[name] = _apply_lane(
+                v.spark, name, pending, affected, rows_per, window
+            )
+            maintain()
 
         with ThreadPoolExecutor(max_workers=len(lanes)) as pool:
             futs = [pool.submit(_run_lane, name) for name in lanes]
             for f in futs:
                 f.result()
 
-        return [
-            {"batch_id": b, "skipped_duplicate_batch": b}
-            if b in done
-            else _assemble(b)
-            for b in batch_ids
-        ]
+        out = []
+        for b in batch_ids:
+            if b in done:
+                out.append({"batch_id": b, "skipped_duplicate_batch": b})
+                continue
+            out.append({name: results[name][b] for name in lanes})
+            if on_batch is not None:
+                on_batch(b, out[-1])
+        return out
 
     # -------------------------------------------------------- streaming mode
 

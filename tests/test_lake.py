@@ -1,8 +1,9 @@
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from pyelt_spark.storage.lake import BUCKET_COL, LakeTable, bucket_expr
+from pyelt_spark.storage.lake import BUCKET_COL, CommitConflict, LakeTable, bucket_expr
 
 
 def _df(spark, ids):
@@ -44,6 +45,42 @@ def test_partial_rewrite_carries_forward(spark, tmp_path):
     assert last.buckets[str(b)][0].startswith(os.path.join("data", "v2"))
     other = [k for k in last.buckets if k != str(b)][0]
     assert last.buckets[other][0].startswith(os.path.join("data", "v1"))
+
+
+def test_second_writer_cannot_replace_published_version(spark, tmp_path):
+    """Two handles on one path both believe version 2 is next. The second
+    must fail loudly and leave the first's manifest byte-for-byte
+    unchanged — a replaced manifest would silently drop every batch the
+    first commit recorded. Checked both when the second handle staged its
+    data before the first published (the create-exclusive publish is the
+    guard) and when it writes after (it must fail before its data write
+    lands on the published version's files)."""
+    path = str(tmp_path / "t")
+    a = LakeTable(spark, path, num_buckets=8)
+    d1 = _df(spark, range(10))
+    b1 = [r[0] for r in d1.select(BUCKET_COL).distinct().collect()]
+    a.commit(d1, b1, batch_id=1)
+    b = LakeTable(spark, path, num_buckets=8)
+    assert b.last_commit().version == 1  # b's commit-log cache is loaded
+
+    staged = b.stage(_df(spark, range(20, 25)), b1)
+    d2 = _df(spark, range(10, 20))
+    b2 = [r[0] for r in d2.select(BUCKET_COL).distinct().collect()]
+    a.commit(d2, b2, batch_id=2, mode="append", batch_ids=[2, 3])
+    manifest = os.path.join(path, "_commits", f"{2:012d}.json")
+    with open(manifest) as f:
+        published = f.read()
+
+    with pytest.raises(CommitConflict, match="version 2"):
+        b.commit(None, b1, batch_id=9, mode="append", staged=staged)
+    with pytest.raises(CommitConflict, match="version 2"):
+        b.commit(_df(spark, range(20, 25)), b1, batch_id=9, mode="append")
+    with open(manifest) as f:
+        assert f.read() == published
+    assert not [n for n in os.listdir(os.path.join(path, "_commits")) if n.startswith(".tmp")]
+    reopened = LakeTable(spark, path, num_buckets=8)
+    assert reopened.committed_batch_ids() == {1, 2, 3}
+    assert sorted(r["k"] for r in reopened.read().collect()) == list(range(20))
 
 
 def test_compact_and_vacuum(spark, tmp_path):
@@ -104,12 +141,10 @@ def test_time_travel_read_version(spark, tmp_path):
 
 def test_commits_cache_population_race_with_commit(spark, tmp_path):
     """A reader thread populating the commits cache concurrently with a
-    writer thread committing must not lose the new commit (r5: the laned
-    replays' prefetch thread reads recipe()/commits() while the lane
-    thread commits — an unsynchronized population could capture a
-    pre-commit disk listing and assign it AFTER the append, dropping the
-    commit from the cache and letting the next version overwrite a
-    published manifest). Deterministically forces the worst interleaving
+    writer thread committing must not lose the new commit (an
+    unsynchronized population could capture a pre-commit disk listing and
+    assign it AFTER the append, dropping the commit from the cache and
+    making the next commit reuse a published version). Deterministically forces the worst interleaving
     by blocking the reader's directory listing until the writer has
     committed."""
     import threading

@@ -74,38 +74,6 @@ def test_laned_crash_lanes_at_different_batches(spark, tmp_path):
     ev.unpersist()
 
 
-def test_laned_mor_compaction_matches_serial(spark, tmp_path):
-    """MoR vault through enough batches to cross the head-compaction
-    threshold: the laned replay must compact at the SAME threshold as the
-    serial path (16 dirs/bucket, pipeline.maintain) and land identical sat
-    state. Pins the r5 divergence where the laned sat lane fell through to
-    compact_head's default of 8, silently doubling mid-replay compaction
-    frequency (laned-vs-serial behavior the CoW parity tests can't see)."""
-    # 20 batches → the head's delta chain crosses 16 dirs exactly once
-    ev = transcript_change_events(spark, 400, batch_size=20, seed=11).persist()
-    try:
-        laned = TranscriptVault(spark, str(tmp_path / "laned"), num_buckets=2, mor=True)
-        MicrobatchRunner(laned).replay(ev)
-
-        serial = TranscriptVault(spark, str(tmp_path / "serial"), num_buckets=2, mor=True)
-        for b in range(20):
-            serial.apply_batch(ev.filter(f"batch_id = {b}"), b)
-
-        def n_compactions(vault):
-            return sum(
-                1
-                for c in vault.sat.head.commits()
-                if c.metrics.get("mor_compaction")
-            )
-
-        assert n_compactions(laned) == n_compactions(serial) == 1
-        a = laned.sat.read().drop("_bucket")
-        b = serial.sat.read().drop("_bucket")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    finally:
-        ev.unpersist()
-
-
 def _pipe_events(spark):
     rows = [
         # batch 0: two patients, one handeling+link, one valueset code

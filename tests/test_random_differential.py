@@ -3,11 +3,15 @@ of the merge-apply spec, on a seeded adversarial stream (duplicate events,
 out-of-order seq ACROSS batches, deletes, reinserts, no-op updates).
 
 The fixed generator tests golden paths; this one walks the verdict lattice
-(insert/update/noop/bump/delete/reinsert/stale) with random interleavings.
+(insert/update/noop/bump/delete/reinsert/stale) with random interleavings,
+applied batch by batch and as windows (all batches in one
+``apply_batches``, and consecutive pairs).
 """
 
 import datetime as dt
 import random
+
+import pytest
 
 from pyelt_spark.operators.scd2 import Scd2Merge, Scd2Table
 
@@ -99,7 +103,45 @@ def _simulate(events):
     )
 
 
+def _engine_rows(table, meta: bool = False):
+    """Full SCD2 history in the simulator's row shape."""
+    return sorted(
+        (
+            r["conv_id"], r["turn_idx"], r["text"],
+            *((r["meta"],) if meta else ()),
+            r["_runid"], r["_revision"], bool(r["_active"]), r["_seq"],
+            r["_deleted_runid"] if r["_deleted_runid"] is not None else -1,
+        )
+        for r in table.read().collect()
+    )
+
+
+def _windows(ids, shape: str):
+    """Batch ids cut into the windows one replay shape applies."""
+    size = {"all": len(ids), "pairs": 2, "singles": 1}[shape]
+    return [ids[i:i + size] for i in range(0, len(ids), size)]
+
+
+def _apply(merge, table, df, ids, shape: str) -> None:
+    for w in _windows(ids, shape):
+        if shape == "singles":
+            merge.apply_batch(table, df.filter(f"batch_id = {w[0]}"), batch_id=int(w[0]))
+        else:
+            merge.apply_batches(table, df, "batch_id", w)
+
+
 def test_engine_matches_simulator_on_adversarial_stream(spark, tmp_path):
+    _check_adversarial(spark, tmp_path, "singles")
+
+
+@pytest.mark.parametrize("shape", ["all", "pairs"])
+def test_window_matches_simulator_on_adversarial_stream(spark, tmp_path, shape):
+    """Window-coalesced application must hit the same spec: cross-batch
+    stale seqs, deletes on tombstones and duplicates inside one window."""
+    _check_adversarial(spark, tmp_path, shape)
+
+
+def _check_adversarial(spark, tmp_path, shape: str) -> None:
     rng = random.Random(20240817)
     events = _gen_stream(rng, n_events=240, n_keys=25, n_batches=4)
     schema = (
@@ -115,17 +157,9 @@ def test_engine_matches_simulator_on_adversarial_stream(spark, tmp_path):
         payload_cols=["role", "text", "tool"],
         order_by=["seq"],
     )
-    for b in sorted({e["batch_id"] for e in events}):
-        m.apply_batch(t, df.filter(f"batch_id = {b}"), batch_id=int(b))
+    _apply(m, t, df, sorted({e["batch_id"] for e in events}), shape)
 
-    got = sorted(
-        (
-            r["conv_id"], r["turn_idx"], r["text"], r["_runid"], r["_revision"],
-            bool(r["_active"]), r["_seq"],
-            r["_deleted_runid"] if r["_deleted_runid"] is not None else -1,
-        )
-        for r in t.read().collect()
-    )
+    got = _engine_rows(t)
     want = _simulate(events)
     assert got == want, (
         f"engine={len(got)} rows, sim={len(want)} rows; "
@@ -189,6 +223,19 @@ def _simulate_evolved(events, evolve_from_batch):
 
 
 def test_engine_matches_simulator_under_schema_evolution(spark, tmp_path):
+    _check_evolution(spark, tmp_path, "singles")
+
+
+@pytest.mark.parametrize("shape", ["all", "pairs"])
+def test_window_matches_simulator_under_schema_evolution(spark, tmp_path, shape):
+    """``pairs`` windows the evolved batches over a head written under the
+    old recipe; ``all`` applies every batch in one window under the new
+    recipe (rows without ``meta`` then compare exactly as old-recipe rows
+    do, so the spec's output is the same)."""
+    _check_evolution(spark, tmp_path, shape)
+
+
+def _check_evolution(spark, tmp_path, shape: str) -> None:
     rng = random.Random(99)
     EVOLVE_AT = 2
     events = _gen_stream(rng, n_events=200, n_keys=20, n_batches=4)
@@ -217,23 +264,22 @@ def test_engine_matches_simulator_under_schema_evolution(spark, tmp_path):
         business_keys=["conv_id", "turn_idx"],
         payload_cols=["role", "text", "tool", "meta"], order_by=["seq"],
     )
-    for b in sorted({e["batch_id"] for e in events}):
-        rows = [e for e in events if e["batch_id"] == b]
-        if b < EVOLVE_AT:
-            df = spark.createDataFrame([tuple(e[c] for c in cols3) for e in rows], s3)
-            m1.apply_batch(t, df, int(b))
-        else:
-            df = spark.createDataFrame([tuple(e[c] for c in cols4) for e in rows], s4)
-            m2.apply_batch(t, df, int(b))
-
-    got = sorted(
-        (
-            r["conv_id"], r["turn_idx"], r["text"], r["meta"], r["_runid"],
-            r["_revision"], bool(r["_active"]), r["_seq"],
-            r["_deleted_runid"] if r["_deleted_runid"] is not None else -1,
+    ids = sorted({e["batch_id"] for e in events})
+    old_ids = [b for b in ids if b < EVOLVE_AT]
+    if shape == "all":
+        df4 = spark.createDataFrame([tuple(e[c] for c in cols4) for e in events], s4)
+        _apply(m2, t, df4, ids, shape)
+    else:
+        df3 = spark.createDataFrame(
+            [tuple(e[c] for c in cols3) for e in events if e["batch_id"] < EVOLVE_AT], s3
         )
-        for r in t.read().collect()
-    )
+        df4 = spark.createDataFrame(
+            [tuple(e[c] for c in cols4) for e in events if e["batch_id"] >= EVOLVE_AT], s4
+        )
+        _apply(m1, t, df3, old_ids, shape)
+        _apply(m2, t, df4, [b for b in ids if b >= EVOLVE_AT], shape)
+
+    got = _engine_rows(t, meta=True)
     want = _simulate_evolved(events, EVOLVE_AT)
     assert got == want, (
         f"engine={len(got)} sim={len(want)}; "
@@ -242,11 +288,11 @@ def test_engine_matches_simulator_under_schema_evolution(spark, tmp_path):
 
 
 def test_laned_replay_matches_serial_on_adversarial_stream(spark, tmp_path):
-    """The laned+prefetching replay orchestration (per-table batch chains,
-    one-ahead sat prefetch, probe-proven empty-batch skips) must land the
-    same vault state as the serial per-batch loop on an ADVERSARIAL stream
-    — duplicates, cross-batch stale seqs, deletes, reinserts — not just
-    the fixed generator's golden paths (r5: the orchestration rewrite)."""
+    """The laned replay orchestration (per-table window lanes,
+    probe-proven empty-batch skips) must land the same vault state as the
+    serial per-batch loop on an ADVERSARIAL stream — duplicates,
+    cross-batch stale seqs, deletes, reinserts — not just the fixed
+    generator's golden paths."""
     from pyelt_spark.plans.pipeline import TranscriptVault
     from pyelt_spark.streaming.runner import MicrobatchRunner
 

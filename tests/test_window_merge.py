@@ -2,8 +2,10 @@
 the closed-form multi-batch application must be BYTE-IDENTICAL to applying
 the same batches sequentially with apply_batch — state (head, hist, hub,
 link) and per-batch metrics alike — must skip committed ids on resume, and
-must refuse (return None → caller falls back) when the out-of-order
-precondition fails."""
+must stay exact on out-of-order streams, whole or cut into sub-windows."""
+
+import datetime as dt
+import random
 
 import pytest
 
@@ -80,21 +82,91 @@ def test_window_sat_resume_skips_committed_prefix(spark, tmp_path):
         ev.unpersist()
 
 
-def test_window_sat_falls_back_on_out_of_order_seqs(spark, tmp_path):
-    """A later batch carrying an OLDER seq for a key (the sequential stale
-    guard's territory) must refuse the closed form."""
-    rows = [
-        (5, "c1", 0, "user", "x", None, "U", None, 0),
-        (3, "c1", 0, "user", "y", None, "U", None, 1),
+def test_window_sat_exact_on_out_of_order_tombstone_stream(spark, tmp_path):
+    """Golden out-of-order window over a seeded tombstone. Batches 0-1
+    (U@1 'a', D@5) leave a tombstone at seq 5; batches 2-5 carry D@10,
+    U@7 'b', D@8, U@9 'c'. The spec drops D@10 (a delete on a tombstone
+    changes nothing, its seq included) and applies 7, 8 and 9: the head
+    ends at 'c', revision 2, active, seq 9, and 'b' goes to history,
+    closed by batch 4. (A running max of earlier seqs would wrongly mark
+    all three stale.) One window, two chunks and per-batch application
+    must all match the simulator, metrics included."""
+    from tests.test_random_differential import _engine_rows, _simulate
+
+    t0 = dt.datetime(2024, 1, 1)
+    spec = [(1, "U", "a", 0), (5, "D", None, 1), (10, "D", None, 2),
+            (7, "U", "b", 3), (8, "D", None, 4), (9, "U", "c", 5)]
+    events = [
+        {"seq": q, "conv_id": "c1", "turn_idx": 0, "role": "user",
+         "text": text, "tool": None, "op": op,
+         "ts": t0 + dt.timedelta(seconds=q), "batch_id": b}
+        for q, op, text, b in spec
     ]
-    adv = spark.createDataFrame(
-        rows,
+    cols = ["seq", "conv_id", "turn_idx", "role", "text", "tool", "op", "ts", "batch_id"]
+    df = spark.createDataFrame(
+        [tuple(e[c] for c in cols) for e in events],
         "seq long, conv_id string, turn_idx int, role string, text string, "
         "tool string, op string, ts timestamp, batch_id int",
     )
-    t = Scd2Table(spark, str(tmp_path / "t"), num_buckets=2)
-    assert _merge().apply_batches(t, adv, "batch_id", [0, 1]) is None
-    assert t.committed_batch_ids() == set()  # nothing half-applied
+    want = _simulate(events)
+    assert ("c1", 0, "c", 5, 2, True, 9, -1) in want
+    assert ("c1", 0, "b", 3, 1, False, 8, 4) in want
+
+    m = _merge()
+    metrics = {}
+    shapes = {"window": [[2, 3, 4, 5]], "chunks": [[2, 3], [4, 5]],
+              "singles": [[2], [3], [4], [5]]}
+    for name, windows in shapes.items():
+        t = Scd2Table(spark, str(tmp_path / name), num_buckets=2)
+        m.apply_batches(t, df, "batch_id", [0, 1])
+        metrics[name] = {}
+        for w in windows:
+            metrics[name].update(m.apply_batches(t, df, "batch_id", w))
+        assert _engine_rows(t) == want, name
+    keys = ("inserted", "updated", "deleted", "unchanged", "stale", "deduped_keys")
+    for name in ("window", "chunks"):
+        for b in (2, 3, 4, 5):
+            got = {k: metrics[name][b][k] for k in keys}
+            assert got == {k: metrics["singles"][b][k] for k in keys}, (name, b)
+
+
+def test_window_lanes_chunk_oversize_windows(spark, tmp_path, monkeypatch):
+    """A rows-per-core budget far below the stream's size cuts every
+    lane's window into consecutive sub-windows. On an out-of-order
+    adversarial stream their commits must land the same hub, sat and link
+    state as sequential per-batch application."""
+    from pyelt_spark.plans.pipeline import TranscriptVault
+    from pyelt_spark.streaming.runner import MicrobatchRunner
+    from tests.test_random_differential import _gen_stream
+
+    monkeypatch.setenv("SPARK_GRAFT_WINDOW_ROWS_PER_CORE", "30")
+    rng = random.Random(4242)
+    events = _gen_stream(rng, n_events=300, n_keys=20, n_batches=6)
+    for e in events:
+        if rng.random() < 0.3:
+            e["tool"] = f"tool{rng.randrange(3)}"
+    cols = ["seq", "conv_id", "turn_idx", "role", "text", "tool", "op", "ts", "batch_id"]
+    df = spark.createDataFrame(
+        [tuple(e[c] for c in cols) for e in events],
+        "seq long, conv_id string, turn_idx int, role string, text string, "
+        "tool string, op string, ts timestamp, batch_id long",
+    )
+    ids = sorted({e["batch_id"] for e in events})
+
+    laned = TranscriptVault(spark, str(tmp_path / "laned"), num_buckets=4)
+    MicrobatchRunner(laned).replay(df)
+    serial = TranscriptVault(spark, str(tmp_path / "serial"), num_buckets=4)
+    for b in ids:
+        serial.apply_batch(df.filter(F.col("batch_id") == b), b)
+
+    windows = [c.batch_ids or [c.batch_id] for c in laned.sat.head.commits()]
+    assert len(windows) > 1 and max(len(w) for w in windows) > 1, windows
+    assert [b for w in windows for b in w] == ids
+    _assert_same(laned.hub.read(), serial.hub.read(), "hub")
+    _assert_same(laned.link.read(), serial.link.read(), "link")
+    _assert_same(
+        laned.sat.read().drop("_bucket"), serial.sat.read().drop("_bucket"), "sat"
+    )
 
 
 def test_window_hub_and_link_match_sequential(spark, tmp_path):

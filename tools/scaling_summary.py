@@ -39,18 +39,11 @@ for n in sorted(by):
             )
             heap = r.get("heap", DEFAULT_HEAP)
             tag = "" if heap == DEFAULT_HEAP else f"  [heap {heap}: excluded]"
-            if not r.get("prefetch", True):
-                tag += "  [prefetch off: excluded]"
             print(
                 f"  {cpus}c: {r['sec']:8.1f}s  {r['events_per_sec']:10,.0f} ev/s  {probe}  ts={r.get('ts')}{tag}"
             )
     pool = {
-        c: [
-            r
-            for r in rs
-            if r.get("heap", DEFAULT_HEAP) == DEFAULT_HEAP
-            and r.get("prefetch", True)
-        ]
+        c: [r for r in rs if r.get("heap", DEFAULT_HEAP) == DEFAULT_HEAP]
         for c, rs in by[n].items()
     }
     if pool.get(2) and pool.get(8):
